@@ -20,13 +20,17 @@ in fusionspark.operators.*.
 
 from __future__ import annotations
 
+import functools
 import json
+import logging
+import operator
 import os
 import re
 import shutil
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,6 +41,8 @@ from fusionspark.operators.context import pack_context
 from fusionspark.operators.embedder import embed_texts, mock_embed
 from fusionspark.operators.keyword import keyword_search
 from fusionspark.operators.knn import knn
+
+log = logging.getLogger("fusionspark.engine")
 
 
 @dataclass
@@ -53,6 +59,73 @@ _ROW_SCHEMA = (
     "id string, vector array<float>, content string, "
     "metadata map<string,string>, tenant_id string, ts long, ttl_ms long"
 )
+
+
+class _SearchFilter:
+    """The search pre-filter — tenant equality, metadata equality (or IN
+    for a list value) and TTL lazy expiry (P4) at one `now` — in its two
+    forms: the Spark predicate the scan paths push down, and the numpy
+    mask the resident blocks apply.  A NULL tenant, a missing metadata key
+    or a NULL map never matches, exactly like SQL's three-valued filter."""
+
+    def __init__(self, tenant_id=None, metadata_filter=None, now_ms=None):
+        self.tenant_id = tenant_id
+        self.metadata = {
+            k: [str(x) for x in v] if isinstance(v, (list, tuple)) else str(v)
+            for k, v in (metadata_filter or {}).items()
+        }
+        self.now = int(time.time() * 1000) if now_ms is None else now_ms
+
+    def column(self):
+        conds = []
+        if self.tenant_id is not None:
+            conds.append(F.col("tenant_id") == self.tenant_id)
+        for k, v in self.metadata.items():
+            item = F.col("metadata").getItem(k)
+            conds.append(item.isin(v) if isinstance(v, list) else item == v)
+        conds.append(
+            (F.col("ttl_ms") == 0)
+            | (F.lit(self.now) - F.col("ts") < F.col("ttl_ms"))
+        )
+        return functools.reduce(operator.and_, conds)
+
+    def mask(self, _ids, attrs: dict) -> np.ndarray:
+        ts = np.asarray(attrs["ts"], dtype=np.int64)
+        ttl = np.asarray(attrs["ttl_ms"], dtype=np.int64)
+        mask = (ttl == 0) | (self.now - ts < ttl)
+        if self.tenant_id is not None:
+            mask &= np.asarray(attrs["tenant_id"]) == self.tenant_id
+        for k, v in self.metadata.items():
+            # map lookups only for the rows still in play
+            live = np.flatnonzero(mask)
+            got = np.frompyfunc(lambda m: None if m is None else m.get(k), 1, 1)(
+                attrs["metadata"][live]
+            )
+            hit = np.zeros(len(live), dtype=bool)
+            for a in (v if isinstance(v, list) else [v]):
+                hit |= got == a
+            mask[live] = hit
+        return mask
+
+
+def _hits(dist: np.ndarray, ids: np.ndarray) -> list[dict]:
+    """One probe's (distances, ids) row as ranked hits; +inf pads drop."""
+    keep = np.isfinite(dist)
+    return [
+        {"id": i, "score": 1.0 - d, "distance": d, "rank": r}
+        for r, (d, i) in enumerate(
+            zip(dist[keep].tolist(), ids[keep].tolist()), 1
+        )
+    ]
+
+
+def _release_resident(idx) -> None:
+    """Release a replaced or unloaded resident index.  Executor blocks are
+    unpersisted (a search still using them recomputes them from lineage);
+    driver blocks are only dropped, since a request thread may still be
+    scanning them, and their arrays are freed once the last one is done."""
+    if idx.placement == "executors":
+        idx.unpersist()
 
 
 class FusionSparkEngine:
@@ -299,14 +372,18 @@ class FusionSparkEngine:
         # reference's one-vector-at-a-time in-memory insert,
         # HNSWIndex.js:126-180), keeping serve-many latency flat across
         # ingest.  Any failure (e.g. a surrogate collision on string ids)
-        # just leaves the index stale → search falls back to exact.
+        # leaves the index stale → search falls back to exact, and says so.
         ent = self._resident.get(collection)
         if ent is not None and ent["at_mutation"] == cfg.get("mutations", 1) - 1:
             try:
                 ent["idx"] = ent["idx"].append(df)
                 ent["at_mutation"] = cfg["mutations"]
-            except Exception:  # noqa: BLE001 — stale fallback is the contract
-                pass
+            except Exception as exc:  # noqa: BLE001 — stale fallback is the contract
+                log.warning(
+                    "insert into %r: resident append failed (%s: %s); the "
+                    "resident index is stale until load_resident()",
+                    collection, type(exc).__name__, exc,
+                )
         return len(rows)
 
     def _rewrite(self, collection: str, keep: DataFrame) -> None:
@@ -416,8 +493,6 @@ class FusionSparkEngine:
             "built_at": int(time.time() * 1000),
         }
         if pq:
-            import numpy as np
-
             from fusionspark.operators.ann import pq_codebooks_lloyd, pq_encode
 
             cbs = pq_codebooks_lloyd(
@@ -485,16 +560,19 @@ class FusionSparkEngine:
             metric=cfg["metric"],
             attr_cols=("tenant_id", "ts", "ttl_ms", "metadata"),
         )
-        old = self._resident.pop(collection, None)
-        if old is not None:
-            old["idx"].unpersist()
+        # swap in one assignment: a concurrent search sees the old index or
+        # the new one, never none
+        old = self._resident.get(collection)
         self._resident[collection] = {
             "idx": idx,
             "at_mutation": tok,
         }
+        if old is not None:
+            _release_resident(old["idx"])
         return {
             "collection": collection,
-            "blocks": sum(p.getNumPartitions() for p in idx._parts),
+            "blocks": idx.n_blocks,
+            "placement": idx.placement,
             "at_mutation": tok,
         }
 
@@ -502,7 +580,7 @@ class FusionSparkEngine:
         """Release the collection's resident blocks (no-op if not loaded)."""
         ent = self._resident.pop(collection, None)
         if ent is not None:
-            ent["idx"].unpersist()
+            _release_resident(ent["idx"])
         ivf = self._resident_ivf.pop(collection, None)
         if ivf is not None:
             ivf["idx"].unpersist()
@@ -610,80 +688,38 @@ class FusionSparkEngine:
         pre-filter semantics); resident=True searches a fresh
         load_resident() block index (exact distances, no per-query table
         scan — the serve-many path).  A stale or missing index either way
-        falls back to exact — never a silent wrong answer."""
+        falls back to exact — never a silent wrong answer — and a
+        resident=True request that falls back logs a warning on the
+        `fusionspark.engine` logger naming the collection and the reason."""
         cfg = self._catalog[collection]
         if query_vector is None:
             query_vector = self.embedder(query_text or "", cfg["dimensions"])
-
-        def _pred():
-            conds = []
-            if tenant_id is not None:
-                conds.append(F.col("tenant_id") == tenant_id)
-            if metadata_filter:
-                for k, v in metadata_filter.items():
-                    if isinstance(v, (list, tuple)):
-                        conds.append(
-                            F.col("metadata").getItem(k).isin([str(x) for x in v])
-                        )
-                    else:
-                        conds.append(F.col("metadata").getItem(k) == str(v))
-            # TTL lazy expiry (P4)
-            now = int(time.time() * 1000)
-            conds.append(
-                (F.col("ttl_ms") == 0) | (F.lit(now) - F.col("ts") < F.col("ttl_ms"))
+        flt = _SearchFilter(tenant_id, metadata_filter)
+        if resident:
+            ridx = self._resident_fresh(collection, cfg)
+            if ridx is not None:
+                # float32 first: the precision the scan paths' probe column
+                # (array<float>) gives the same query
+                q = np.asarray([query_vector], dtype=np.float32).astype(np.float64)
+                dist, ids = ridx.search(
+                    q, k=top_k, pre_filter=flt.mask, merge="driver"
+                )
+                return _hits(dist[0], ids[0])
+        use_ivf = (
+            approximate and cfg["metric"] == "cosine" and self._index_fresh(cfg)
+        )
+        if resident:
+            log.warning(
+                "search %r: resident index is %s; served by the %s path",
+                collection,
+                "stale" if collection in self._resident else "not loaded",
+                "IVF" if use_ivf else "exact",
             )
-            pred = conds[0]
-            for c in conds[1:]:
-                pred = pred & c
-            return pred
-
         probes = self.spark.createDataFrame(
             [("q0", [float(x) for x in query_vector])],
             "probe_id: string, probe_embedding: array<float>",
         )
-        if resident:
-            ridx = self._resident_fresh(collection, cfg)
-            if ridx is not None:
-                import numpy as np
-
-                now = int(time.time() * 1000)
-                mf = metadata_filter or {}
-
-                def pre(ids, attrs):
-                    ts = np.asarray(attrs["ts"], dtype=np.int64)
-                    ttl = np.asarray(attrs["ttl_ms"], dtype=np.int64)
-                    mask = (ttl == 0) | (now - ts < ttl)
-                    if tenant_id is not None:
-                        mask &= np.asarray(
-                            [t == tenant_id for t in attrs["tenant_id"]]
-                        )
-                    for mk, mv in mf.items():
-                        if isinstance(mv, (list, tuple)):
-                            allowed = {str(x) for x in mv}
-                            mask &= np.asarray(
-                                [(m or {}).get(mk) in allowed
-                                 for m in attrs["metadata"]]
-                            )
-                        else:
-                            mask &= np.asarray(
-                                [(m or {}).get(mk) == str(mv)
-                                 for m in attrs["metadata"]]
-                            )
-                    return mask
-
-                out = ridx.search(
-                    probes, k=top_k, pre_filter=pre, merge="driver"
-                )
-                # the string-id decode join loses row order; rank carries it
-                return sorted(
-                    (
-                        {"id": r["id"], "score": r["score"],
-                         "distance": r["distance"], "rank": r["rank"]}
-                        for r in out.collect()
-                    ),
-                    key=lambda h: h["rank"],
-                )
-        if approximate and cfg["metric"] == "cosine" and self._index_fresh(cfg):
+        if use_ivf:
             from fusionspark.operators.ann import ivf_search_persisted
 
             out = ivf_search_persisted(
@@ -691,14 +727,14 @@ class FusionSparkEngine:
                 os.path.join(self.root, f"index={collection}"),
                 probes, k=top_k,
                 n_probe=min(n_probe, cfg["index"]["n_centroids"]),
-                id_col="id", vector_col="vector", pre_filter=_pred(),
+                id_col="id", vector_col="vector", pre_filter=flt.column(),
             )
             return [
                 {"id": r["id"], "score": r["sim"], "distance": 1.0 - r["sim"],
                  "rank": r["rnk"]}
                 for r in out.collect()
             ]
-        df = self._load(collection).filter(_pred())
+        df = self._load(collection).filter(flt.column())
         out = knn(
             df, probes, k=top_k, metric=cfg["metric"],
             vector_col="vector", id_col="id",
@@ -779,8 +815,6 @@ class FusionSparkEngine:
                 )
             path = os.path.join(self.root, f"index={collection}")
             if method == "ivf_pq":
-                import numpy as np
-
                 from fusionspark.operators.ann import ivf_pq_search
 
                 if "pq" not in cfg["index"]:

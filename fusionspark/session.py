@@ -36,8 +36,10 @@ def get_spark(app_name: str = "fusionspark", shuffle_partitions: int | None = No
         # Python workers run 32-way task-parallel: a multi-threaded BLAS in
         # each worker oversubscribes the box (32 x 32 threads) and thrashes
         # the numpy GEMM kernels.  One BLAS thread per task slot is the
-        # cluster-correct setting (1 core per task); the driver's own numpy
-        # is unaffected (its BLAS is already loaded).
+        # cluster-correct setting (1 core per task).  The driver's own numpy
+        # keeps its threads (its BLAS is already loaded) until a resident
+        # index is placed on the driver, which pins the driver's BLAS to one
+        # thread for the rest of the process (operators/serving.py).
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")

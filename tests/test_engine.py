@@ -589,3 +589,137 @@ def test_analyze_spectrum_and_clusters(engine):
     out2 = engine.analyze("an")
     assert "clusters" not in out2
     assert len(engine.analyze("an", k=50)["clusters"]) <= 20
+
+
+def _jobs_in_group(spark, fn):
+    """Run fn under a fresh job group; (result, number of Spark jobs)."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"engine-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_resident_request_job_count_per_placement(engine, spark, monkeypatch):
+    """A single-probe resident request runs NO Spark job when the blocks
+    sit on the driver, and exactly ONE (the kernel's collect — no probe
+    frame, no id-decode join, no result frame) when the budget forces
+    them onto the executors; both answer like the exact scan."""
+    import math
+
+    import fusionspark.operators.serving as sv
+
+    engine.create_collection("jc", CollectionConfig(dimensions=4))
+    engine.insert("jc", [
+        {"id": f"v{i}",
+         "vector": [math.sin(i + 1), math.cos(2 * i + 1), 1.0, 0.0],
+         "metadata": {"cat": "x" if i % 2 else "y"}}
+        for i in range(40)
+    ], tenant_id="t1")
+    kw = dict(query_vector=[1.0, 0.0, 1.0, 0.0], top_k=5, tenant_id="t1",
+              metadata_filter={"cat": "x"})
+    exact = engine.search("jc", **kw)
+    for budget, placement, n_jobs in (
+        (sv.DRIVER_BLOCK_BYTES, "driver", 0), (-1, "executors", 1),
+    ):
+        monkeypatch.setattr(sv, "DRIVER_BLOCK_BYTES", budget)
+        assert engine.load_resident("jc")["placement"] == placement
+        hits, jobs = _jobs_in_group(
+            spark, lambda: engine.search("jc", resident=True, **kw)
+        )
+        assert jobs == n_jobs, placement
+        assert [h["id"] for h in hits] == [h["id"] for h in exact]
+        for e, g in zip(exact, hits):
+            assert abs(e["score"] - g["score"]) < 1e-9
+            assert g["rank"] == e["rank"]
+
+
+def test_search_filter_mask_matches_spark_predicate(spark):
+    """The resident blocks' numpy mask and the scan paths' Spark predicate
+    are one filter: the same rows pass for a NULL tenant, a missing
+    metadata key, a NULL map, scalar and list-valued filters, ttl_ms == 0
+    and an expired row."""
+    import numpy as np
+
+    from fusionspark.engine import _SearchFilter
+
+    now = 1_700_000_000_000
+    df = spark.createDataFrame(
+        [
+            ("ttl0", "t1", {"cat": "x", "lang": "en"}, now - 10**9, 0),
+            ("live", "t1", {"cat": "y"}, now - 10, 100),
+            ("expired", "t1", {"cat": "x"}, now - 1000, 100),
+            ("at_ttl", "t1", {"cat": "x"}, now - 100, 100),
+            ("null_tenant", None, {"cat": "x"}, now - 10, 0),
+            ("no_cat", "t2", {"lang": "en"}, now - 10, 0),
+            ("null_map", "t1", None, now - 10, 0),
+            ("fresh", "t2", {"cat": "z"}, now, 1),
+        ],
+        "id string, tenant_id string, metadata map<string,string>, "
+        "ts long, ttl_ms long",
+    )
+    rows = df.collect()
+    # the attribute arrays exactly as ResidentIndex blocks hold them
+    attrs = {a: np.asarray([r[a] for r in rows])
+             for a in ("tenant_id", "ts", "ttl_ms", "metadata")}
+    ids = np.asarray([r["id"] for r in rows])
+    cases = [
+        (None, None),
+        ("t1", None),
+        ("t1", {"cat": "x"}),
+        (None, {"cat": ["x", "z"]}),
+        (None, {"cat": ("z",), "lang": "en"}),
+        (None, {"lang": "en"}),
+        ("t2", {"cat": []}),
+        ("nobody", None),
+    ]
+    for tenant, mf in cases:
+        flt = _SearchFilter(tenant, mf, now_ms=now)
+        spark_ids = {r["id"] for r in df.filter(flt.column()).collect()}
+        numpy_ids = set(ids[flt.mask(ids, attrs)].tolist())
+        assert numpy_ids == spark_ids, (tenant, mf)
+    everyone = _SearchFilter(now_ms=now)
+    assert set(ids[everyone.mask(ids, attrs)].tolist()) == {
+        "ttl0", "live", "null_tenant", "no_cat", "null_map", "fresh"
+    }
+
+
+def test_resident_fallbacks_are_logged(engine, caplog, monkeypatch):
+    """A resident=True request served by another path, and a resident
+    append that fails on insert, each log a warning that names the
+    collection and the reason — neither falls back silently."""
+    import logging
+
+    from fusionspark.operators import serving
+
+    engine.create_collection("lg", CollectionConfig(dimensions=4))
+    engine.insert("lg", [{"id": "a", "vector": [1, 0, 0, 0]}])
+    with caplog.at_level(logging.WARNING, logger="fusionspark.engine"):
+        hits = engine.search("lg", query_vector=[1, 0, 0, 0], resident=True)
+    assert [h["id"] for h in hits] == ["a"]
+    assert "'lg'" in caplog.text and "not loaded" in caplog.text
+    assert "exact" in caplog.text
+
+    engine.load_resident("lg")
+    caplog.clear()
+
+    def failing_append(self, rows):
+        raise ValueError("simulated surrogate collision")
+
+    monkeypatch.setattr(serving.ResidentIndex, "append", failing_append)
+    with caplog.at_level(logging.WARNING, logger="fusionspark.engine"):
+        engine.insert("lg", [{"id": "b", "vector": [0.9, 0.1, 0, 0]}])
+    assert "'lg'" in caplog.text
+    assert "simulated surrogate collision" in caplog.text
+    assert engine._resident_fresh("lg", engine._catalog["lg"]) is None
+
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="fusionspark.engine"):
+        hits = engine.search("lg", query_vector=[1, 0, 0, 0], resident=True)
+    assert [h["id"] for h in hits] == ["a", "b"]  # the exact scan sees b
+    assert "'lg'" in caplog.text and "stale" in caplog.text

@@ -270,3 +270,84 @@ def test_every_tool_has_input_schema(srv_engine):
         if t["name"] == "fusionspark_list_collections":
             continue  # genuinely arg-free
         assert schema.get("properties"), t["name"]
+
+
+def _resident_collection(r: Router, name: str) -> list:
+    """A 24-doc collection with a driver-placed resident index; returns 16
+    resident search bodies, with and without a tenant filter."""
+    r.route("POST", "/api/collections", {"name": name, "dimensions": 8})
+    for i in range(24):
+        r.route("POST", "/api/insert", {
+            "collection": name, "id": f"d{i}", "text": f"topic {i % 5} doc {i}",
+            "tenantId": "t1" if i % 3 else "t2",
+        })
+    status, info = r.route("POST", "/api/index/resident", {"collection": name})
+    assert status == 201 and info["placement"] == "driver"
+    return [
+        {"collection": name, "query": f"topic {i % 5} doc {i}", "topK": 4,
+         "resident": True, **({"tenantId": "t1"} if i % 2 else {})}
+        for i in range(16)
+    ]
+
+
+def test_concurrent_resident_searches_match_serial(srv_engine):
+    """The threaded HTTP server calls Router.route concurrently; resident
+    searches sharing one driver-held index from 4 threads return exactly
+    the serial replies (a short switch interval forces interleaving)."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    r = Router(srv_engine)
+    bodies = _resident_collection(r, "cc")
+    serial = [r.route("POST", "/api/search", dict(b)) for b in bodies]
+    assert all(s == 200 and hits for s, hits in serial)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            threaded = list(pool.map(
+                lambda b: r.route("POST", "/api/search", dict(b)), bodies * 4,
+                timeout=300,
+            ))
+    finally:
+        sys.setswitchinterval(interval)
+    assert threaded == serial * 4
+
+
+def test_resident_reload_during_concurrent_searches(srv_engine, monkeypatch):
+    """A resident reload while 4 threads search: each thread's first
+    request looks the old index up, then waits for the reload to finish
+    before scanning it.  Every request still returns the serial reply —
+    a replaced index stays searchable for requests that already hold it."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    r = Router(srv_engine)
+    bodies = _resident_collection(r, "cr")
+    serial = [r.route("POST", "/api/search", dict(b)) for b in bodies]
+    assert all(s == 200 and hits for s, hits in serial)
+    held, reloaded = threading.Semaphore(0), threading.Event()
+    fresh = srv_engine._resident_fresh
+
+    def lookup_then_wait(collection, cfg):
+        idx = fresh(collection, cfg)
+        if not reloaded.is_set():
+            held.release()
+            assert reloaded.wait(300)
+        return idx
+
+    monkeypatch.setattr(srv_engine, "_resident_fresh", lookup_then_wait)
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        pending = [
+            pool.submit(r.route, "POST", "/api/search", dict(b)) for b in bodies
+        ]
+        try:
+            for _ in range(4):
+                assert held.acquire(timeout=300)
+            status, _info = r.route(
+                "POST", "/api/index/resident", {"collection": "cr"}
+            )
+            assert status == 201
+        finally:
+            reloaded.set()
+        replies = [f.result(timeout=300) for f in pending]
+    assert replies == serial

@@ -1,5 +1,7 @@
 """Resident serving index: parity with the attested knn/ivf kernels, tie
-determinism, merge-strategy equivalence, and input validation."""
+determinism, merge-strategy equivalence, and input validation.  The parity
+tests run on both block placements (driver and executors), forced by
+monkeypatching the DRIVER_BLOCK_BYTES budget."""
 
 from __future__ import annotations
 
@@ -9,7 +11,17 @@ from pyspark.sql import functions as F
 
 from fusionspark.operators.ann import ivf_knn
 from fusionspark.operators.knn import knn, self_probes
+import fusionspark.operators.serving as sv
 from fusionspark.operators.serving import ResidentIndex, ResidentIVF
+
+PLACEMENTS = ("driver", "executors")
+
+
+def _place(monkeypatch, placement: str) -> None:
+    """Make the next builds land on `placement`."""
+    monkeypatch.setattr(
+        sv, "DRIVER_BLOCK_BYTES", 1 << 62 if placement == "driver" else -1
+    )
 
 
 @pytest.fixture(scope="module")
@@ -47,19 +59,23 @@ def _pairs(df):
 
 
 @pytest.mark.parametrize("metric", ["cosine", "dot", "euclidean"])
-def test_resident_matches_knn_numpy(spark, corpus, probes, metric):
-    idx = ResidentIndex.build(corpus, metric=metric)
-    try:
-        got = _pairs(idx.search(probes, k=5))
-        ref = _pairs(knn(corpus, probes, k=5, metric=metric, strategy="numpy"))
-        assert got.keys() == ref.keys()
-        for key, d in ref.items():
-            assert got[key] == pytest.approx(d, abs=1e-9)
-    finally:
-        idx.unpersist()
+def test_resident_matches_knn_numpy(spark, corpus, probes, metric, monkeypatch):
+    ref = _pairs(knn(corpus, probes, k=5, metric=metric, strategy="numpy"))
+    for placement in PLACEMENTS:
+        _place(monkeypatch, placement)
+        idx = ResidentIndex.build(corpus, metric=metric)
+        try:
+            assert idx.placement == placement
+            got = _pairs(idx.search(probes, k=5))
+            assert got.keys() == ref.keys(), placement
+            for key, d in ref.items():
+                assert got[key] == pytest.approx(d, abs=1e-9), (placement, key)
+        finally:
+            idx.unpersist()
 
 
-def test_tree_merge_equals_driver_merge(spark, corpus, probes):
+def test_tree_merge_equals_driver_merge(spark, corpus, probes, monkeypatch):
+    _place(monkeypatch, "executors")  # a driver-placed index always folds
     idx = ResidentIndex.build(corpus)
     try:
         a = idx.search(probes, k=7, merge="driver").collect()
@@ -85,7 +101,7 @@ def test_probe_batch_equals_dataframe_probes(spark, corpus, probes):
         idx.unpersist()
 
 
-def test_duplicate_vector_ties_break_by_id(spark):
+def test_duplicate_vector_ties_break_by_id(spark, monkeypatch):
     # ids 100..199 duplicate ids 0..99 exactly: every top-k boundary is a
     # bitwise distance tie, so membership/rank must follow id ASC
     base = spark.range(100).select(
@@ -102,13 +118,16 @@ def test_duplicate_vector_ties_break_by_id(spark):
     corpus.count()
     p = self_probes(corpus, 10).cache()
     p.count()
-    idx = ResidentIndex.build(corpus)
+    ref = _pairs(knn(corpus, p, k=4, strategy="numpy"))
     try:
-        got = _pairs(idx.search(p, k=4))
-        ref = _pairs(knn(corpus, p, k=4, strategy="numpy"))
-        assert got.keys() == ref.keys()
+        for placement in PLACEMENTS:
+            _place(monkeypatch, placement)
+            idx = ResidentIndex.build(corpus)
+            try:
+                assert _pairs(idx.search(p, k=4)).keys() == ref.keys(), placement
+            finally:
+                idx.unpersist()
     finally:
-        idx.unpersist()
         corpus.unpersist()
         p.unpersist()
 
@@ -154,7 +173,7 @@ def _assert_tie_aware_match(got: dict, ref: dict) -> None:
             assert d == pytest.approx(boundary, abs=1e-9)
 
 
-def test_string_ids_supported(spark, corpus, probes):
+def test_string_ids_supported(spark, corpus, probes, monkeypatch):
     """String-keyed corpora (the reference's ids are strings,
     HNSWIndex.js:27-35) dict-encode to xxhash64 surrogates and decode back:
     results must match knn() on the same string-keyed corpus (tie-free
@@ -167,14 +186,18 @@ def test_string_ids_supported(spark, corpus, probes):
         F.concat(F.lit("p"), F.col("probe_id")).alias("probe_id"),
         "probe_embedding",
     )
-    idx = ResidentIndex.build(scorpus)
-    try:
-        out = idx.search(sprobes, k=5)
-        assert dict(out.dtypes)["vec_id"] == "string"
-        assert dict(out.dtypes)["probe_id"] == "string"
-        _assert_tie_aware_match(_pairs(out), _pairs(knn(scorpus, sprobes, k=5, strategy="numpy")))
-    finally:
-        idx.unpersist()
+    ref = _pairs(knn(scorpus, sprobes, k=5, strategy="numpy"))
+    for placement in PLACEMENTS:
+        _place(monkeypatch, placement)
+        idx = ResidentIndex.build(scorpus)
+        try:
+            assert idx.placement == placement
+            out = idx.search(sprobes, k=5)
+            assert dict(out.dtypes)["vec_id"] == "string"
+            assert dict(out.dtypes)["probe_id"] == "string"
+            _assert_tie_aware_match(_pairs(out), ref)
+        finally:
+            idx.unpersist()
 
 
 def test_string_ids_resident_ivf(spark, corpus, probes):
@@ -210,8 +233,7 @@ def test_tree_merge_with_pre_filter_raises(spark, corpus, probes):
 
 
 def test_auto_merge_picks_tree_above_threshold(spark, corpus, probes, monkeypatch):
-    import fusionspark.operators.serving as sv
-
+    _place(monkeypatch, "executors")  # merge only applies to executor blocks
     idx = ResidentIndex.build(corpus)
     try:
         # corpus has 8 partitions: auto → driver under the default threshold
@@ -226,7 +248,7 @@ def test_auto_merge_picks_tree_above_threshold(spark, corpus, probes, monkeypatc
         idx.unpersist()
 
 
-def test_k_larger_than_corpus(spark):
+def test_k_larger_than_corpus(spark, monkeypatch):
     df = (
         spark.range(3)
         .select(
@@ -239,34 +261,40 @@ def test_k_larger_than_corpus(spark):
         .repartition(2)
     )
     p = self_probes(df, 2)
-    idx = ResidentIndex.build(df)
-    try:
-        out = idx.search(p, k=10).toPandas()
-        assert sorted(out.groupby("probe_id").size().tolist()) == [3, 3]
-        assert set(out["rank"]) == {1, 2, 3}
-    finally:
-        idx.unpersist()
+    for placement in PLACEMENTS:
+        _place(monkeypatch, placement)
+        idx = ResidentIndex.build(df)
+        try:
+            out = idx.search(p, k=10).toPandas()
+            assert sorted(out.groupby("probe_id").size().tolist()) == [3, 3]
+            assert set(out["rank"]) == {1, 2, 3}
+        finally:
+            idx.unpersist()
 
 
-def test_append_equals_full_build(spark, corpus, probes):
+def test_append_equals_full_build(spark, corpus, probes, monkeypatch):
     base = corpus.filter(F.col("vec_id") < 3000)
     extra = corpus.filter(F.col("vec_id") >= 3000)
-    full = ResidentIndex.build(corpus)
-    idx0 = ResidentIndex.build(base)
-    idx1 = idx0.append(extra)
-    try:
-        a = sorted(map(tuple, full.search(probes, k=5).collect()))
-        b = sorted(map(tuple, idx1.search(probes, k=5).collect()))
-        assert a == b
-        # the pre-append index stays valid and only sees the base rows
-        pre = idx0.search(probes, k=5).toPandas()
-        assert pre["vec_id"].max() < 3000
-    finally:
-        full.unpersist()
-        idx1.unpersist()
+    for placement in PLACEMENTS:
+        _place(monkeypatch, placement)
+        full = ResidentIndex.build(corpus)
+        idx0 = ResidentIndex.build(base)
+        idx1 = idx0.append(extra)
+        try:
+            assert idx1.placement == placement
+            a = sorted(map(tuple, full.search(probes, k=5).collect()))
+            b = sorted(map(tuple, idx1.search(probes, k=5).collect()))
+            assert a == b, placement
+            # the pre-append index stays valid and only sees the base rows
+            pre = idx0.search(probes, k=5).toPandas()
+            assert pre["vec_id"].max() < 3000
+        finally:
+            full.unpersist()
+            idx1.unpersist()
 
 
-def test_streaming_append_matches_batch(spark, corpus, probes, tmp_path):
+def test_streaming_append_matches_batch(spark, corpus, probes, tmp_path,
+                                       monkeypatch):
     """foreachBatch ResidentIndex.append per micro-batch ends at the same
     search results as one batch build (blocks are disjoint by id; the
     merge is order-free)."""
@@ -276,30 +304,33 @@ def test_streaming_append_matches_batch(spark, corpus, probes, tmp_path):
     extra.filter(F.col("vec_id") % 2 == 0).write.parquet(src + "/a")
     extra.filter(F.col("vec_id") % 2 == 1).write.parquet(src + "/b")
 
-    holder = {"idx": ResidentIndex.build(base)}
+    for placement in PLACEMENTS:
+        _place(monkeypatch, placement)
+        holder = {"idx": ResidentIndex.build(base)}
 
-    def ingest(df, _eid):
-        holder["idx"] = holder["idx"].append(df)
+        def ingest(df, _eid):
+            holder["idx"] = holder["idx"].append(df)
 
-    q = (
-        spark.readStream.schema(extra.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+        q = (
+            spark.readStream.schema(extra.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src + "/*")
+            .writeStream.foreachBatch(ingest)
+            .option("checkpointLocation", str(tmp_path / f"ckpt-{placement}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
 
-    full = ResidentIndex.build(corpus)
-    try:
-        a = sorted(map(tuple, full.search(probes, k=5).collect()))
-        b = sorted(map(tuple, holder["idx"].search(probes, k=5).collect()))
-        assert a == b
-    finally:
-        full.unpersist()
-        holder["idx"].unpersist()
+        full = ResidentIndex.build(corpus)
+        try:
+            assert holder["idx"].placement == placement
+            a = sorted(map(tuple, full.search(probes, k=5).collect()))
+            b = sorted(map(tuple, holder["idx"].search(probes, k=5).collect()))
+            assert a == b, placement
+        finally:
+            full.unpersist()
+            holder["idx"].unpersist()
 
 
 # ── pure-numpy property tests for the exact-selection kernels ──
@@ -401,26 +432,28 @@ def test_strip_fold_matches_brute_force(n, q, k, strip, seed, ties):
         assert sorted(zip(acc[0][qi], acc[1][qi])) == sorted(zip(bd[qi], bi[qi]))
 
 
-def test_pre_filter_matches_filtered_knn(spark, corpus, probes):
+def test_pre_filter_matches_filtered_knn(spark, corpus, probes, monkeypatch):
     labeled = corpus.withColumn("label", (F.col("vec_id") % 7).cast("int"))
-    idx = ResidentIndex.build(labeled, attr_cols=("label",))
-    try:
-        got = _pairs(
-            idx.search(
-                probes, k=5,
-                pre_filter=lambda ids, attrs: np.isin(attrs["label"], [0, 2, 4]),
+    ref = _pairs(
+        knn(labeled, probes, k=5, strategy="numpy",
+            pre_filter=F.col("label").isin(0, 2, 4))
+    )
+    for placement in PLACEMENTS:
+        _place(monkeypatch, placement)
+        idx = ResidentIndex.build(labeled, attr_cols=("label",))
+        try:
+            got = _pairs(
+                idx.search(
+                    probes, k=5,
+                    pre_filter=lambda ids, attrs: np.isin(attrs["label"], [0, 2, 4]),
+                )
             )
-        )
-        ref = _pairs(
-            knn(labeled, probes, k=5, strategy="numpy",
-                pre_filter=F.col("label").isin(0, 2, 4))
-        )
-        assert got.keys() == ref.keys()
-    finally:
-        idx.unpersist()
+            assert got.keys() == ref.keys(), placement
+        finally:
+            idx.unpersist()
 
 
-def test_pre_filter_sees_original_string_ids(spark, corpus, probes):
+def test_pre_filter_sees_original_string_ids(spark, corpus, probes, monkeypatch):
     """On a string-keyed corpus the pre_filter callback receives the
     ORIGINAL string ids, not the int64 xxhash64 surrogates — an id-based
     filter must select exactly the same rows as the equivalent attr-based
@@ -439,38 +472,45 @@ def test_pre_filter_sees_original_string_ids(spark, corpus, probes):
         seen.append(np.asarray(ids))
         return np.isin(ids, list(keep))
 
-    idx = ResidentIndex.build(scorpus)
-    try:
-        got = _pairs(idx.search(sprobes, k=5, pre_filter=flt))
-        assert all(a.dtype.kind in ("U", "O") for a in seen)  # strings, not int64
-        assert {v for _, v, _ in got} <= keep  # filter actually applied
-        ref = _pairs(
-            knn(
-                scorpus.withColumn(
-                    "m",
-                    F.regexp_replace("vec_id", "^v", "").cast("long") % 7,
-                ),
-                sprobes, k=5, strategy="numpy",
-                pre_filter=F.col("m").isin(0, 2, 4),
+    ref = _pairs(
+        knn(
+            scorpus.withColumn(
+                "m",
+                F.regexp_replace("vec_id", "^v", "").cast("long") % 7,
+            ),
+            sprobes, k=5, strategy="numpy",
+            pre_filter=F.col("m").isin(0, 2, 4),
+        )
+    )
+    for placement in PLACEMENTS:
+        _place(monkeypatch, placement)
+        idx = ResidentIndex.build(scorpus)
+        try:
+            got = _pairs(idx.search(sprobes, k=5, pre_filter=flt))
+            # strings, not int64 (executor-side calls are not seen here)
+            assert all(a.dtype.kind in ("U", "O") for a in seen)
+            assert {v for _, v, _ in got} <= keep  # filter actually applied
+            _assert_tie_aware_match(got, ref)
+        finally:
+            idx.unpersist()
+    assert seen  # the driver placement ran the filter in this process
+
+
+def test_pre_filter_excluding_everything_returns_empty(spark, corpus, probes,
+                                                       monkeypatch):
+    for placement in PLACEMENTS:
+        _place(monkeypatch, placement)
+        idx = ResidentIndex.build(corpus)
+        try:
+            out = idx.search(
+                probes, k=5, pre_filter=lambda ids, attrs: ids < 0
             )
-        )
-        _assert_tie_aware_match(got, ref)
-    finally:
-        idx.unpersist()
+            assert out.count() == 0, placement
+        finally:
+            idx.unpersist()
 
 
-def test_pre_filter_excluding_everything_returns_empty(spark, corpus, probes):
-    idx = ResidentIndex.build(corpus)
-    try:
-        out = idx.search(
-            probes, k=5, pre_filter=lambda ids, attrs: ids < 0
-        )
-        assert out.count() == 0
-    finally:
-        idx.unpersist()
-
-
-def test_tiled_kernel_multi_strip_matches_single_shot(spark):
+def test_tiled_kernel_multi_strip_matches_single_shot(spark, monkeypatch):
     """Blocks larger than TILE_ROWS run the strip loop (the 1M serving
     shape); a 1-partition 10k-row corpus (3 strips) must match knn()
     exactly, including k > TILE_ROWS where every strip keeps ALL its rows
@@ -487,20 +527,23 @@ def test_tiled_kernel_multi_strip_matches_single_shot(spark):
         .coalesce(1)
     )
     probes = self_probes(corpus, 7)
-    idx = ResidentIndex.build(corpus)
-    try:
-        assert idx.rdd.getNumPartitions() == 1  # one 10k block → 3 strips
-        for k in (10, 5000):  # k < strip AND k spanning multiple strips
-            got = _pairs(idx.search(probes, k=k))
-            ref = _pairs(knn(corpus, probes, k=k, strategy="numpy"))
-            assert got.keys() == ref.keys()
-            for key, d in ref.items():
-                assert got[key] == pytest.approx(d, abs=1e-9)
-    finally:
-        idx.unpersist()
+    refs = {k: _pairs(knn(corpus, probes, k=k, strategy="numpy"))
+            for k in (10, 5000)}  # k < strip AND k spanning multiple strips
+    for placement in PLACEMENTS:
+        _place(monkeypatch, placement)
+        idx = ResidentIndex.build(corpus)
+        try:
+            assert idx.n_blocks == 1  # one 10k block → 3 strips
+            for k, ref in refs.items():
+                got = _pairs(idx.search(probes, k=k))
+                assert got.keys() == ref.keys(), placement
+                for key, d in ref.items():
+                    assert got[key] == pytest.approx(d, abs=1e-9)
+        finally:
+            idx.unpersist()
 
 
-def test_tiled_kernel_euclidean_strip_slicing(spark):
+def test_tiled_kernel_euclidean_strip_slicing(spark, monkeypatch):
     """The euclidean path slices __sqnorm__ per strip — a multi-strip
     block must still produce exact distances (a mis-sliced norm vector
     would corrupt every strip after the first)."""
@@ -516,12 +559,119 @@ def test_tiled_kernel_euclidean_strip_slicing(spark):
         .coalesce(1)
     )
     probes = self_probes(corpus, 5)
-    idx = ResidentIndex.build(corpus, metric="euclidean")
+    ref = _pairs(knn(corpus, probes, k=8, metric="euclidean",
+                     strategy="numpy"))
+    for placement in PLACEMENTS:
+        _place(monkeypatch, placement)
+        idx = ResidentIndex.build(corpus, metric="euclidean")
+        try:
+            # modular vectors duplicate heavily → compare tie-aware
+            _assert_tie_aware_match(_pairs(idx.search(probes, k=8)), ref)
+        finally:
+            idx.unpersist()
+
+
+def _jobs_in_group(spark, fn):
+    """Run fn under a fresh job group; (result, number of Spark jobs)."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"serving-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "job count")
     try:
-        got = _pairs(idx.search(probes, k=8))
-        ref = _pairs(knn(corpus, probes, k=8, metric="euclidean",
-                         strategy="numpy"))
-        # modular vectors duplicate heavily → compare tie-aware
-        _assert_tie_aware_match(got, ref)
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_driver_placement_searches_without_a_job(spark, corpus, probes):
+    """The default budget keeps a small index on the driver; a matrix
+    search then runs no Spark job and returns the same top-k arrays as
+    the DataFrame form."""
+    idx = ResidentIndex.build(corpus)
+    try:
+        assert idx.placement == "driver" and idx.n_blocks == 8
+        assert 0 < idx.nbytes <= sv.DRIVER_BLOCK_BYTES
+        rows = probes.select("probe_id", "probe_embedding").collect()
+        P = np.asarray([r[1] for r in rows], dtype=np.float64)
+        (dist, ids), jobs = _jobs_in_group(spark, lambda: idx.search(P, k=5))
+        assert jobs == 0
+        assert dist.shape == ids.shape == (len(rows), 5)
+        df = _pairs(idx.search(probes, k=5))
+        got = {
+            (rows[q][0], int(ids[q, r]), r + 1): dist[q, r]
+            for q in range(len(rows)) for r in range(5)
+        }
+        assert got == df
     finally:
         idx.unpersist()
+
+
+def test_unpersist_drops_driver_arrays(spark, corpus, probes):
+    idx = ResidentIndex.build(corpus)
+    assert idx.placement == "driver" and idx._blocks
+    idx.unpersist()
+    assert idx._blocks is None
+    with pytest.raises(ValueError, match="unpersisted"):
+        idx.search(probes, k=5)
+
+
+def test_unpinnable_blas_keeps_executor_placement(spark, corpus, monkeypatch):
+    """Where the driver's BLAS cannot be pinned to one thread, blocks that
+    fit the budget stay on the executors instead."""
+    _place(monkeypatch, "driver")
+    monkeypatch.setattr(sv, "_blas_pinned", False)
+    idx = ResidentIndex.build(corpus)
+    try:
+        assert idx.placement == "executors"
+    finally:
+        idx.unpersist()
+
+
+def test_append_crossing_budget_moves_to_executors(spark, corpus, probes,
+                                                   monkeypatch):
+    """An append() whose combined blocks exceed the budget leaves ONE
+    placement — the executors — with the same results as a full build,
+    while the pre-append driver index stays valid."""
+    base = corpus.filter(F.col("vec_id") < 3000)
+    extra = corpus.filter(F.col("vec_id") >= 3000)
+    _place(monkeypatch, "driver")
+    idx0 = ResidentIndex.build(base)
+    monkeypatch.setattr(sv, "DRIVER_BLOCK_BYTES", idx0.nbytes)
+    full = ResidentIndex.build(corpus)
+    idx1 = idx0.append(extra)
+    try:
+        assert idx0.placement == "driver"
+        assert full.placement == idx1.placement == "executors"
+        assert idx1._blocks is None and idx1._parts
+        assert idx1.nbytes > sv.DRIVER_BLOCK_BYTES
+        a = sorted(map(tuple, full.search(probes, k=5).collect()))
+        b = sorted(map(tuple, idx1.search(probes, k=5).collect()))
+        assert a == b
+        assert idx0.search(probes, k=5).toPandas()["vec_id"].max() < 3000
+    finally:
+        full.unpersist()
+        idx1.unpersist()
+        idx0.unpersist()
+
+
+def test_string_append_collision_check_on_both_placements(spark, monkeypatch):
+    """Appending ids already resident under the same string is legal (the
+    engine's per-tenant namespaces); the injectivity check passes on both
+    placements and the appended rows are searchable."""
+    df = spark.createDataFrame(
+        [(f"v{i}", [float(i + 1), 1.0]) for i in range(6)],
+        "vec_id string, embedding array<float>",
+    )
+    for placement in PLACEMENTS:
+        _place(monkeypatch, placement)
+        idx = ResidentIndex.build(df.filter(F.col("vec_id") < "v3"))
+        idx = idx.append(df.filter(F.col("vec_id") >= "v2"))
+        try:
+            dist, ids = idx.search(np.asarray([[6.0, 1.0]]), k=10)
+            assert sorted(ids[0].tolist()) == [
+                "v0", "v1", "v2", "v2", "v3", "v4", "v5"
+            ], placement
+        finally:
+            idx.unpersist()
